@@ -19,7 +19,6 @@ from dist_map_reduce_spark import registry
 from dist_map_reduce_spark.session import get_spark
 
 registry.load_all()
-registry.load_staged()
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -133,7 +132,7 @@ HEADLINE = [
     "quality_ccnet_buckets",
     "cdc_merge_upsert_orders",
     # r13 STAGED-FOREVER additions (saturation policy —
-    # registry.load_all docstring): the compacted-index flag
+    # registry docstring): the compacted-index flag
     # certification and BM25 ranked retrieval, perf-tracked like
     # every staged query
     "streaming_postcompaction_neardup_flags",

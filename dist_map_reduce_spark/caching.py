@@ -57,18 +57,13 @@ def _is_live(df: DataFrame) -> bool:
 
 
 def _discard(df: DataFrame) -> None:
-    """Release a slot entry if the owning session is alive; a stopped
-    session already dropped its storage, so stale entries are just
-    forgotten. Handles both entry kinds: CacheManager entries
-    (``persist``) respond to ``unpersist``; checkpoint snapshots hang
-    their blocks off the LogicalRDD's backing RDD, released via the
-    py4j handle (and, belt-and-braces, by the ContextCleaner once the
-    slot reference is dropped)."""
+    """Release a slot's checkpoint snapshot if the owning session is
+    alive; a stopped session already dropped its storage, so stale
+    entries are just forgotten. The snapshot's blocks hang off the
+    LogicalRDD's backing RDD, released via the py4j handle (and,
+    belt-and-braces, by the ContextCleaner once the slot reference is
+    dropped)."""
     if _is_live(df):
-        try:
-            df.unpersist()
-        except Exception:
-            pass
         try:
             plan = df._jdf.queryExecution().analyzed()
             if plan.getClass().getSimpleName() == "LogicalRDD":
@@ -137,9 +132,7 @@ def peek(slot: str, key: str, session=None) -> DataFrame | None:
     ref = session if session is not None else SparkSession.getActiveSession()
     if df.sparkSession is not ref:
         # a LIVE entry owned by a different session: miss for this
-        # caller, but keep (and keep tracking) the owner's cache —
-        # deleting the slot here would orphan a persisted DataFrame
-        # the CacheManager still holds, beyond clear()'s reach
+        # caller, but keep the owner's snapshot tracked
         return None
     return df
 

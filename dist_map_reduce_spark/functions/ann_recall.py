@@ -40,12 +40,7 @@ from dist_map_reduce_spark.functions import (  # noqa: F401
     similarity_ivfpq,
     similarity_pq,
 )
-from dist_map_reduce_spark.registry import (
-    ORACLES,
-    STAGED_ORACLES,
-    query,
-    resolve_oracle,
-)
+from dist_map_reduce_spark.registry import ORACLES, STAGED_ORACLES, query
 
 # variant label -> (registered query name, callable)
 _VARIANTS: dict[str, str] = {
@@ -66,7 +61,7 @@ def _recall_oracle() -> str:
     inside a FROM subquery)."""
     union = "\n      UNION ALL ".join(
         f"SELECT '{label}' AS variant, query_id, vec_id\n"
-        f"      FROM ({resolve_oracle((ORACLES | STAGED_ORACLES)[name])})"
+        f"      FROM ({(ORACLES | STAGED_ORACLES)[name]})"
         f" AS {label}_t"
         for label, name in _VARIANTS.items()
     )
@@ -77,7 +72,7 @@ def _recall_oracle() -> str:
                row_number() OVER (
                  PARTITION BY query_id ORDER BY cos DESC, vec_id ASC
                ) AS rn
-        FROM ({resolve_oracle(ORACLES[_EXACT])}) AS exact_t
+        FROM ({ORACLES[_EXACT]}) AS exact_t
       ) r WHERE rn <= 5
     ),
     variants AS (

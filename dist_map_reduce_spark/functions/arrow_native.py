@@ -116,7 +116,7 @@ def arrow_text_stats_per_source(
     statistics whose per-document projection runs as a mapInArrow
     stage (pyarrow.compute kernels, zero pandas), aggregated
     JVM-side. STAGED-FOREVER under the saturation policy
-    (registry.load_all)."""
+    (registry docstring)."""
     docs = load_table(spark, sf_dir, "documents")
     return (
         arrow_stats_rows(docs)

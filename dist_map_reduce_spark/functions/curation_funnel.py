@@ -71,9 +71,6 @@ conditional aggregates over that single cached table, and the sample
 is one TakeOrderedAndProject over the cascade filter. Nothing in the
 funnel adds a shuffle beyond what its component queries already
 proved out.
-
-Promotion state: PROMOTED to @query in the r11 window
-(registry.load_all's rotation arithmetic).
 """
 
 from __future__ import annotations
@@ -83,37 +80,21 @@ from pyspark.sql import functions as F
 
 from dist_map_reduce_spark.caching import persist_tracked
 from dist_map_reduce_spark.catalog import load_table
-from dist_map_reduce_spark.registry import (
-    ORACLES,
-    QUERIES,
-    query,
-    resolve_oracle,
+
+# the component modules register the queries and oracles the funnel
+# composes; importing them is what makes QUERIES/ORACLES[...] resolve
+from dist_map_reduce_spark.functions import (  # noqa: F401
+    clustering,
+    curation,
+    dedup,
+    quality_model,
+    semdedup,
 )
+from dist_map_reduce_spark.functions.curation_ext import CAP
+from dist_map_reduce_spark.registry import ORACLES, QUERIES, query
 
 SAMPLE_K = 100  # final-stage A-ES sample size (= weighted_sample_aes)
 _POW32 = float(2**32)
-CAP = 10  # per-source doc cap — MUST equal curation_ext.CAP
-# (pinned by tests/test_curation_funnel.py; importing curation_ext
-# here for the constant would defeat _ensure_components' laziness)
-
-
-def _ensure_components() -> None:
-    """Import the component modules whose registered queries and
-    oracle SQL the funnel composes. DEFERRED, not module-level: the
-    funnel's module import must register ONLY the funnel, or the six
-    component modules' registrations ride into the driver's
-    first-WINDOW correctness window ahead of it and break the
-    rotation arithmetic (12+ rider slots — see the lazy-oracle note in registry.py).
-    Idempotent and cheap after the first call (sys.modules hits)."""
-    from dist_map_reduce_spark.functions import clustering  # noqa: F401
-    from dist_map_reduce_spark.functions import curation  # noqa: F401
-    from dist_map_reduce_spark.functions import curation_ext  # noqa: F401
-    from dist_map_reduce_spark.functions import dedup  # noqa: F401
-    from dist_map_reduce_spark.functions import quality_model  # noqa: F401
-    from dist_map_reduce_spark.functions import semdedup  # noqa: F401
-
-    assert CAP == curation_ext.CAP, "funnel CAP drifted from curation_ext"
-
 
 _STAGES = (
     "corpus",
@@ -127,18 +108,13 @@ _STAGES = (
 )
 
 
-def _funnel_oracle() -> str:
-    """LAZY oracle composer (passed as the callable itself to
-    @query): resolves at first use, after load_all, so the
-    component oracles it embeds are registered without this module
-    having to import them at module scope."""
-    _ensure_components()
-    return f"""
+# DuckDB oracle: re-derives every stage from the component oracles
+_FUNNEL_ORACLE = f"""
     WITH ex AS (
       SELECT min(doc_id) AS doc_id FROM documents GROUP BY md5(text)
     ),
     nd AS (
-      SELECT doc_id FROM ({resolve_oracle(ORACLES["dedup_keep_drop_list"])}) nd_t
+      SELECT doc_id FROM ({ORACLES["dedup_keep_drop_list"]}) nd_t
       WHERE action = 'keep'
     ),
     -- SemDeDup stage gated on doc-alignment: every document has a
@@ -150,15 +126,15 @@ def _funnel_oracle() -> str:
            = (SELECT count(*) FROM documents) AS ok
     ),
     sd AS (
-      SELECT vec_id AS doc_id FROM ({resolve_oracle(ORACLES["semdedup_prune_list"])}) sd_t
+      SELECT vec_id AS doc_id FROM ({ORACLES["semdedup_prune_list"]}) sd_t
       WHERE action = 'keep'
     ),
     ql AS (
-      SELECT doc_id FROM ({resolve_oracle(ORACLES["quality_logreg_scores"])}) ql_t
+      SELECT doc_id FROM ({ORACLES["quality_logreg_scores"]}) ql_t
       WHERE keep
     ),
     dc AS (
-      SELECT doc_id FROM ({resolve_oracle(ORACLES["decontaminate_against_eval"])}) dc_t
+      SELECT doc_id FROM ({ORACLES["decontaminate_against_eval"]}) dc_t
       WHERE NOT contaminated
     ),
     flags AS (
@@ -251,7 +227,6 @@ def funnel_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     if hit is not None:
         return hit
 
-    _ensure_components()
     docs = load_table(spark, sf_dir, "documents")
     ex = QUERIES["dedup_exact_docs"](spark, sf_dir).select(
         F.col("keep_id").alias("doc_id"), F.lit(True).alias("f1")
@@ -402,7 +377,7 @@ def export_curated_corpus(
     )
 
 
-@query("curation_funnel", oracle=_funnel_oracle)
+@query("curation_funnel", oracle=_FUNNEL_ORACLE)
 def curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(stage_no, stage, docs_out, tokens_out): the curation cascade
     funnel — seven conditional aggregates plus one survivor-relative

@@ -2,9 +2,7 @@
 
 Extracted from ``functions/dedup.py`` so sibling modules
 (``dedup_simhash``) can reuse the hot-key cap and pair generation
-WITHOUT triggering dedup's query registrations at import time — the
-registry's 50-slot correctness window is ordered by first import
-(registry.load_all), so helper reuse must not drag registrations in.
+without importing dedup's queries.
 """
 
 from __future__ import annotations

@@ -152,7 +152,7 @@ def ppjoin_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     the prefix-filtered inverted index and verified exactly with the
     cross-multiplied integer predicate. n_capped_postings certifies
     the safety valve stayed closed (0 => provably complete answer).
-    STAGED-FOREVER under the saturation policy (registry.load_all)."""
+    STAGED-FOREVER under the saturation policy (registry docstring)."""
     docs = load_table(spark, sf_dir, "documents")
     # the shingle table feeds five consumers (df counts, sizes, rank,
     # and both verification arms) — one tracked persist slot

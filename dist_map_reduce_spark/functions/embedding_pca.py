@@ -31,8 +31,7 @@ SUM association order differs, and the 6-dp round absorbs those ULPs
 leaves ~9 digits of headroom at sf0.01). `+ 0` normalizes −0.0 on
 near-zero off-diagonals in both engines (the profiling.py fix).
 
-Promotion state: PROMOTED to @query in the r11 window (see
-registry.load_all's rotation arithmetic).
+Promotion state: PROMOTED to @query in r11.
 """
 
 from __future__ import annotations

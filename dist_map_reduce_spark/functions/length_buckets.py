@@ -111,7 +111,7 @@ def length_bucket_padding_waste(
     """(bucket_len, n_docs, used_tokens, capacity, truncated_tokens,
     waste_frac) per populated power-of-two length class, plus the
     bucket_len = -1 TOTAL row. STAGED-FOREVER under the saturation
-    policy (registry.load_all)."""
+    policy (registry docstring)."""
     docs = load_table(spark, sf_dir, "documents")
     n = F.size(F.split("text", " "))
     classed = docs.select(

@@ -38,9 +38,8 @@ bit-identical ln inputs, and the 6-dp round absorbs association-order
 ULPs in the per-doc sum — the discipline proven by
 lm_unigram_doc_scores across five driver rounds.
 
-Promotion state: PROMOTED to @query in the r11 window (staged since
-r8 with every-run parity coverage; registry.load_all has the
-rotation arithmetic).
+Promotion state: PROMOTED to @query in r11 (staged since r8 with
+every-run parity coverage).
 """
 
 from __future__ import annotations

@@ -1,6 +1,4 @@
-"""Extended multimodal operators (registered after the round-2
-correctness window; see registry.load_all ordering notes).
-"""
+"""Extended multimodal operators."""
 
 from __future__ import annotations
 

@@ -125,7 +125,7 @@ def reservoir_merge_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     merged_matches_direct (must equal the sample size — the merged
     reservoir is rank-for-rank the direct global bottom-K),
     n_strata, corpus_rows. STAGED-FOREVER under the saturation
-    policy (registry.load_all)."""
+    policy (registry docstring)."""
     base = (
         load_table(spark, sf_dir, "documents")
         .select("doc_id", "source")

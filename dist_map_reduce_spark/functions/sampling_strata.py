@@ -193,7 +193,7 @@ def stratified_hamilton_sample(
     and n_sampled must equal BUDGET exactly — proportional allocation
     by largest remainder with the sampled-id sum certifying the
     sample content. STAGED-FOREVER under the saturation policy
-    (registry.load_all)."""
+    (registry docstring)."""
     base = (
         load_table(spark, sf_dir, "documents")
         .select("doc_id", "source")

@@ -36,8 +36,7 @@ identical in JVM and DuckDB; the sort key is the hex string itself
 and conv()'s 32-bit slice parses to the same BIGINT both sides — the
 dedup_common discipline.
 
-Promotion state: PROMOTED to @query in the r11 window (see
-registry.load_all's rotation arithmetic).
+Promotion state: PROMOTED to @query in r11.
 """
 
 from __future__ import annotations

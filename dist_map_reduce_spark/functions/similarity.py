@@ -20,8 +20,8 @@ static.
 The geometry/index math (hyperplanes, cosine, k-means fit, the IVF
 cell-restricted search) lives registration-free in
 ``similarity_common`` so other modules — the k-means IVF variant in
-``similarity_ivf_kmeans`` — can reuse it without dragging this
-module's seven registrations into the correctness window. Names are
+``similarity_ivf_kmeans`` — can reuse it without importing this
+module's seven registrations. Names are
 re-imported here for compatibility (tests and SCALE.md reference
 them via this module).
 """

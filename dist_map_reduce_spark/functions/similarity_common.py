@@ -2,11 +2,8 @@
 
 Shared by ``functions/similarity.py`` (the seven registered fixture
 queries) and ``functions/similarity_ivf_kmeans.py`` (the k-means IVF
-search). Lives in its own module for the same reason as
-``dedup_common``: importing a module registers ALL its queries, so a
-new in-window module must be able to reuse the math without dragging
-the whole similarity family's registrations into the driver's 50-slot
-correctness window (registry.load_all ordering contract).
+search). Lives in its own module so other modules reuse the math
+without importing the similarity family's queries.
 
 Everything here is deterministic by construction — md5-derived
 hyperplanes, 6-dp-rounded cosines and means, id tie-breaks — so every

@@ -7,11 +7,7 @@ trained. This module registers the trained variant: the
 ``kmeans_embedding_cells`` Lloyd's build (similarity_common.
 kmeans_fit) supplies the centroid table, and the identical
 cell-restricted search (similarity_common.ivf_search) runs against
-it. Registered here, not in similarity.py, so the new query enters
-the driver's 50-slot correctness window without dragging the seven
-r4-stamped similarity registrations along (registry.load_all
-ordering contract; shared math is registration-free in
-similarity_common for exactly this reason).
+it. The shared math lives registration-free in similarity_common.
 
 The whole pipeline — init, KMEANS_ROUNDS assignment rounds,
 6-dp-rounded centroids, NPROBE probe list, top-5 — is deterministic,

@@ -31,18 +31,24 @@ PQ plan) plus the PCA fit's single-Exchange gramian.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from dist_map_reduce_spark.caching import persist_tracked
 from dist_map_reduce_spark.catalog import load_table
-
-# NOTE (review r14): embedding_pca and similarity_pq register @query
-# entries on import, so this module imports them LAZILY inside each
-# function — importing similarity_opq itself registers NOTHING, and
-# the two gate entry points run registry.load_all() before their
-# first rider import (_ensure_canonical_registry), so the driver's
-# first-WINDOW cut can never shift through this module.
+from dist_map_reduce_spark.functions.ann_recall import exact_top5, grade_recall
+from dist_map_reduce_spark.functions.embedding_pca import (
+    D,
+    pca_fit,
+    pca_project,
+)
+from dist_map_reduce_spark.functions.similarity_pq import (
+    M_SUB,
+    pq_fit,
+    pq_lut,
+    similarity_ann_pq_adc_topk,
+    subvector_rows,
+)
 
 
 def eigenvalue_allocation(eigvals, m_sub: int | None = None) -> list[int]:
@@ -55,9 +61,6 @@ def eigenvalue_allocation(eigvals, m_sub: int | None = None) -> list[int]:
     import math
 
     if m_sub is None:
-        _ensure_canonical_registry()
-        from dist_map_reduce_spark.functions.similarity_pq import M_SUB
-
         m_sub = M_SUB
     cap = len(eigvals) // m_sub
     # floor tiny/negative values (numerical noise around zero
@@ -87,9 +90,6 @@ def opq_rotation(emb: DataFrame):
     """(mean, R): the OPQ-P rotation — full-d PCA eigenbasis with
     columns permuted by eigenvalue allocation. R is orthonormal
     (a permutation of an orthonormal basis)."""
-    _ensure_canonical_registry()
-    from dist_map_reduce_spark.functions.embedding_pca import D, pca_fit
-
     mu, comps, ev = pca_fit(emb, D)
     perm = eigenvalue_allocation(ev)
     return mu, comps[:, perm]
@@ -99,9 +99,6 @@ def rotated_corpus(emb: DataFrame, mean, rot) -> DataFrame:
     """(vec_id, embedding): the corpus rotated into the OPQ basis —
     one BLAS matmul per Arrow batch (pca_project), column renamed so
     the whole similarity_pq machinery runs on it unchanged."""
-    _ensure_canonical_registry()
-    from dist_map_reduce_spark.functions.embedding_pca import pca_project
-
     return pca_project(emb, mean, rot).select(
         "vec_id", F.col("pc").alias("embedding")
     )
@@ -111,15 +108,6 @@ def opq_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """OPQ-rotated PQ-ADC top-5 — the similarity_ann_pq_adc_topk
     plan on the rotated corpus (separate cache slots so the plain-PQ
     index is not clobbered)."""
-    _ensure_canonical_registry()
-    from pyspark.sql import Window
-
-    from dist_map_reduce_spark.functions.similarity_pq import (
-        pq_fit,
-        pq_lut,
-        subvector_rows,
-    )
-
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", "embedding"
     )
@@ -168,39 +156,13 @@ def opq_gated_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     as the iterative-training loop scalars. Both candidate indexes
     hang off cache slots, so the winner's returned plan reuses the
     A/B's own build rather than training a third time."""
-    _ensure_canonical_registry()
     rec = {
         r.variant: r.hits
         for r in opq_vs_pq_recall(spark, sf_dir).collect()
     }
     if rec["opq_pq"] > rec["pq_adc"]:
         return opq_pq_topk(spark, sf_dir)
-    # lazy direct import, not a registry lookup (ADVICE r12): this is
-    # a library helper and must work in a process that never ran
-    # registry.load_all; deferred to call time so importing this
-    # module stays registration-free
-    from dist_map_reduce_spark.functions.similarity_pq import (
-        similarity_ann_pq_adc_topk,
-    )
-
     return similarity_ann_pq_adc_topk(spark, sf_dir)
-
-
-def _ensure_canonical_registry() -> None:
-    """Pristine-process hazard (ADVICE r13, widened per ADVICE r14):
-    EVERY public function in this module that lazily imports a
-    @query-registering module (ann_recall, similarity_pq,
-    embedding_pca) calls this first — not just the two gate entry
-    points. If those riders landed in QUERIES before a LATER
-    load_all, the cut-line guard would be silently skipped (QUERIES
-    non-empty) and the first-WINDOW cut would shift. Running load_all
-    FIRST — before any rider import, on every branch — pins the
-    canonical registration order; it is idempotent (module imports
-    are no-ops the second time), so on the driver path this costs
-    nothing."""
-    from dist_map_reduce_spark import registry
-
-    registry.load_all()
 
 
 def opq_vs_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -208,15 +170,6 @@ def opq_vs_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     against the exact cosine top-5, via the shared ann_recall
     grading machinery (same exact-top5 cache slot, same recall
     definition — one source of truth)."""
-    _ensure_canonical_registry()
-    from dist_map_reduce_spark.functions.ann_recall import (
-        exact_top5,
-        grade_recall,
-    )
-    from dist_map_reduce_spark.functions.similarity_pq import (
-        similarity_ann_pq_adc_topk,
-    )
-
     variants = similarity_ann_pq_adc_topk(spark, sf_dir).select(
         F.lit("pq_adc").alias("variant"), "query_id", "vec_id"
     ).unionAll(

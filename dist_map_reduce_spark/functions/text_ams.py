@@ -196,7 +196,7 @@ def text_ams_f2_moment(spark: SparkSession, sf_dir: str) -> DataFrame:
     '__merged__' corpus row whose counters are the element-wise SUM
     of the source grids — the AMS merge certified in-plan, graded
     against the exact second moment both per source and merged.
-    STAGED-FOREVER under the saturation policy (registry.load_all)."""
+    STAGED-FOREVER under the saturation policy (registry docstring)."""
     docs = load_table(spark, sf_dir, "documents")
     # NO pre-explode repartition, deliberately (the curation_ext /
     # text_winnow precedent was tested and did NOT reproduce here):

@@ -40,7 +40,7 @@ quadratic and no global ordering exists anywhere (per-query top-5
 windows over the candidate set).
 
 PROMOTED to a driver slot in r15 via the first executed displacement
-(registry.load_all docstring): ``join_semi_active_customers`` retired
+(registry docstring): ``join_semi_active_customers`` retired
 under criterion (i) — ``join_semi_anti_balance`` strictly subsumes
 its LeftSemi plan coverage — and this query took the opened slot in
 the r15 correctness window (record: PLANS.md r15). Staged-forever

@@ -182,7 +182,7 @@ def text_mg_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     summaries: n_mg never exceeds n_exact, undercount never exceeds
     the theorem's budget Σ_s λ_s + λ_m, and both facts ship as the
     certified within_bound column. STAGED-FOREVER under the
-    saturation policy (registry.load_all docstring)."""
+    saturation policy (registry docstring)."""
     from dist_map_reduce_spark.caching import get_or_build
 
     counts = _source_word_counts(spark, sf_dir)
@@ -190,7 +190,7 @@ def text_mg_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     # budget, and merged (≤ sources·(MG_K+1) rows) feeds λ_m AND the
     # survivor filter — unslotted, each consumer re-ran the
     # vocabulary-scale bucketed-tournament windows / summary aggregate
-    # (audited: 42 exchanges → 18 at sf0.1, λ_s evaluated 3× before)
+    # (audited: 42 exchanges → 10 at sf0.1, λ_s evaluated 3× before)
     lam_s = get_or_build(
         "mg_lam_s",
         sf_dir,

@@ -108,7 +108,7 @@ def bigram_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 def text_pmi_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(w1, w2, n_ab, n_a, n_b, n_bigrams, pmi) for every adjacent
     bigram with n_ab ≥ MIN_CO and decimal-certified pmi > 0.
-    STAGED-FOREVER under the saturation policy (registry.load_all
+    STAGED-FOREVER under the saturation policy (registry
     docstring)."""
     pair = bigram_counts(spark, sf_dir)
     lm = pair.groupBy("w1").agg(

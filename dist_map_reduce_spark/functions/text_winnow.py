@@ -303,8 +303,7 @@ def winnow_decontaminate(
 
 # ---------------------------------------------------------------------------
 # Queries over the library functions above (staged r9, PROMOTED to
-# @query in the r11 window after every-run parity coverage — see
-# registry.load_all). The fixture corpus is synthetic word soup with
+# @query in r11 after every-run parity coverage). The fixture corpus is synthetic word soup with
 # essentially no organic >=23-char verbatim overlaps, so each query
 # deterministically PLANTS a shared passage into a doc_id-keyed
 # subset before detection — the pii_redact_docs discipline: the

@@ -149,7 +149,7 @@ def abtest_purchase_value_welch(
     zero pooled variance NULL-guards t and df. One corpus-scale
     stage: the pushdown-filtered purchase scan into a 2-row arm
     aggregate (map-side partial). STAGED-FOREVER under the
-    saturation policy (registry.load_all docstring)."""
+    saturation policy (registry docstring)."""
     purchases = (
         load_table(spark, sf_dir, "events")
         .filter(F.col("event_type") == "purchase")
@@ -225,7 +225,7 @@ def abtest_purchase_conversion(
 ) -> DataFrame:
     """(n_a, x_a, n_b, x_b, p_a, p_b, diff, se, z) — one row: the
     pooled two-proportion z-test between the user_id-parity arms.
-    STAGED-FOREVER under the saturation policy (registry.load_all
+    STAGED-FOREVER under the saturation policy (registry
     docstring)."""
     users = (
         load_table(spark, sf_dir, "events")

@@ -228,7 +228,7 @@ def ivm_orders_agg_maintenance(
     maintained aggregate next to the full recompute over the merged
     table, with the IVM identity (maintained == recomputed, exact
     DECIMAL equality) as a certified output column.
-    STAGED-FOREVER under the saturation policy (registry.load_all)."""
+    STAGED-FOREVER under the saturation policy (registry docstring)."""
     b = _bucketed(spark, sf_dir)
     m = maintained_agg(b)
     r = recomputed_agg(b).select(

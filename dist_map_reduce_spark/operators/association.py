@@ -171,7 +171,7 @@ def basket_brand_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(ante, cons, n_ante, n_cons, n_both, n_baskets, support,
     confidence, lift) for every directed brand rule with
     n_both ≥ MIN_CO and integer-certified lift > 1. STAGED-FOREVER
-    under the saturation policy (registry.load_all docstring)."""
+    under the saturation policy (registry docstring)."""
     comps = compositions(spark, sf_dir)
     dim = brand_dim(spark, sf_dir)
     n = comps.agg(F.sum("cnt").cast("bigint").alias("n_baskets"))

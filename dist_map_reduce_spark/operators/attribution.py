@@ -76,7 +76,7 @@ def attribution_last_touch(
 ) -> DataFrame:
     """(channel, n_purchases, attributed_value, value_share) — one
     row per last-touch channel (incl. '(none)'). STAGED-FOREVER
-    under the saturation policy (registry.load_all docstring)."""
+    under the saturation policy (registry docstring)."""
     events = load_table(spark, sf_dir, "events").select(
         "user_id", "ts", "event_id", "event_type", "value"
     )

@@ -109,7 +109,7 @@ def benford_order_totals(
 ) -> DataFrame:
     """(digit, n_obs, n_total, p_obs, p_exp, deviation, mad_total)
     — one row per first digit 1..9, complete grid. STAGED-FOREVER
-    under the saturation policy (registry.load_all docstring)."""
+    under the saturation policy (registry docstring)."""
     obs = first_digit_counts(spark, sf_dir)
     grid = spark.range(1, 10).select(F.col("id").cast("int").alias("digit"))
     tot = obs.agg(F.sum("n_obs").cast("bigint").alias("n_total"))

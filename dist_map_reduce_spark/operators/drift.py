@@ -152,7 +152,7 @@ def drift_psi_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     equi-width price buckets (base-table bounds) plus the bucket=-1
     total row whose psi is THE drift scalar — base orders vs the
     cdc_merge-applied version, Laplace-smoothed, round-after-ln.
-    STAGED-FOREVER under the saturation policy (registry.load_all)."""
+    STAGED-FOREVER under the saturation policy (registry docstring)."""
     base = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_totalprice"
     )

@@ -191,7 +191,7 @@ def funnel_conversion_events(
     """(step, event_type, n_users, conv_from_prev, conv_from_start)
     — one row per funnel step, counts exact, ratios single IEEE
     divisions rounded at the seam. STAGED-FOREVER under the
-    saturation policy (registry.load_all docstring)."""
+    saturation policy (registry docstring)."""
     frontiers = funnel_frontiers(spark, sf_dir)
     counts = None
     for k, (step, frontier) in enumerate(zip(STEPS, frontiers), 1):
@@ -240,7 +240,7 @@ def funnel_time_to_convert(
     user-scale frontier⋈frontier on the SAME persist slots the
     count query uses — invoking both funnel queries builds each
     frontier once. STAGED-FOREVER under the saturation policy
-    (registry.load_all docstring)."""
+    (registry docstring)."""
     frontiers = funnel_frontiers(spark, sf_dir)
     transitions = [(1, 2), (2, 3), (3, 4), (1, 4)]
     out = None

@@ -159,7 +159,7 @@ def hll_native_customer_cardinality(
     same user set, which would make the merged row identical to the
     group rows and the merge demo vacuous), so the merged estimate
     differs from every group estimate for real.
-    STAGED-FOREVER under the saturation policy (registry.load_all)."""
+    STAGED-FOREVER under the saturation policy (registry docstring)."""
     ev = load_table(spark, sf_dir, "orders")
     h = (
         F.conv(

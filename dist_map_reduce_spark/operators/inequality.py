@@ -99,7 +99,7 @@ def lorenz_gini_customer_spend(
 ) -> DataFrame:
     """(decile, n_customers, decile_share, cum_share, n_total, gini)
     — the decile Lorenz curve with the Gini scalar on each row.
-    STAGED-FOREVER under the saturation policy (registry.load_all
+    STAGED-FOREVER under the saturation policy (registry
     docstring)."""
     spend = rfm_rollup(spark, sf_dir).select("o_custkey", "m_cents")
     ranked = spend.select(

@@ -87,7 +87,7 @@ def lateral_topn_orders_per_customer(
     customer's top-2 orders by price via a correlated LATERAL
     subquery with LIMIT — decorrelated by Spark into WindowGroupLimit
     + one equi-join (plan-pinned). STAGED-FOREVER under the
-    saturation policy (registry.load_all)."""
+    saturation policy (registry docstring)."""
     load_table(spark, sf_dir, "customer").createOrReplaceTempView(
         _CUST_VIEW
     )

@@ -29,7 +29,7 @@ emits coarse partitions and the downstream aggregate is JVM-side.
 At 100 TB the same class streams Arrow batches per partition — the
 shape is identical, only the batch materialization changes.
 
-STAGED-FOREVER under the saturation policy (registry.load_all).
+STAGED-FOREVER under the saturation policy (registry docstring).
 """
 
 from __future__ import annotations

@@ -131,7 +131,7 @@ def recursive_order_lineage(spark: SparkSession, sf_dir: str) -> DataFrame:
     for every depth reached. Roots are keys whose halved key is
     absent from orders; every order appears at exactly one depth, so
     sum(n_orders) == |orders| and depth 0 carries one row per root.
-    STAGED-FOREVER under the saturation policy (registry.load_all)."""
+    STAGED-FOREVER under the saturation policy (registry docstring)."""
     # Spark guards recursive CTEs with TWO safety valves: a level
     # limit (spark.sql.cteRecursionLevelLimit, default 100) and a
     # TOTAL-ROW limit (spark.sql.cteRecursionRowLimit, default 1e6).

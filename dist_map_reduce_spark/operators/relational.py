@@ -272,7 +272,7 @@ def join_semi_active_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     the network; no row multiplication.
 
     RETIRED from its driver slot in r15 (displacement criterion (i),
-    registry.load_all docstring; record: PLANS.md r15):
+    registry docstring; record: PLANS.md r15):
     ``join_semi_anti_balance`` exercises the same LeftSemi on the
     same tables in a strictly larger plan and
     ``join_anti_dormant_customers`` keeps the anti single alive. The

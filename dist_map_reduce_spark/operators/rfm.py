@@ -134,7 +134,7 @@ def rfm_customer_segments(
 ) -> DataFrame:
     """(r_score, f_score, m_score, segment, n_customers, avg_spend)
     — the populated cells of the 5×5×5 RFM grid. STAGED-FOREVER
-    under the saturation policy (registry.load_all docstring)."""
+    under the saturation policy (registry docstring)."""
     rollup_c = rfm_rollup(spark, sf_dir)
     cuts = rollup_c.agg(
         *[

@@ -83,7 +83,7 @@ def events_seasonality_dow_hour(
 ) -> DataFrame:
     """(dow, hr, n, mean_value, std_value, n_total, r2_seasonal) —
     one row per populated ISO-dow × hour cell. STAGED-FOREVER under
-    the saturation policy (registry.load_all docstring)."""
+    the saturation policy (registry docstring)."""
     cells = (
         load_table(spark, sf_dir, "events")
         .select(

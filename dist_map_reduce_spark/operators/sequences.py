@@ -253,7 +253,7 @@ def event_eventually_follows(
     margins and the complete |types|² grid (constant-key equi-join,
     not a Cartesian) are type-dimension-bounded. Output is
     |types|² rows at any corpus size. STAGED-FOREVER under the
-    saturation policy (registry.load_all docstring)."""
+    saturation policy (registry docstring)."""
     per_ut = (
         load_table(spark, sf_dir, "events")
         .groupBy("user_id", "event_type")

@@ -98,7 +98,7 @@ def type_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
     (r17): the dim feeds the steps join plus one decode join per
     path position — 1 + MAX_STEPS = 13 plan branches, each of which
     otherwise re-runs the corpus scan + distinct (audited: 34
-    exchanges unslotted → 10 slotted at sf0.1)."""
+    exchanges unslotted → 14 slotted at sf0.1)."""
     from dist_map_reduce_spark.caching import get_or_build
 
     return get_or_build(
@@ -126,7 +126,7 @@ def session_path_counts(
 ) -> DataFrame:
     """(path, n_steps, n_sessions) — exact session counts per
     first-MAX_STEPS event-type path, path rendered 'a>b>c'.
-    STAGED-FOREVER under the saturation policy (registry.load_all
+    STAGED-FOREVER under the saturation policy (registry
     docstring)."""
     # NULL types excluded BEFORE sessionization on BOTH engines —
     # an inner dim join after rn assignment would silently drop the

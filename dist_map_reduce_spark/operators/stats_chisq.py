@@ -184,7 +184,7 @@ def mutual_info_segment_priority(
     convention (the filter drops them — ln of 0 never evaluates);
     ln-only per the lm_score identical-ln precedent; ≤25-addend
     sums under the seam round; zero entropy NULL-guards nmi.
-    STAGED-FOREVER under the saturation policy (registry.load_all
+    STAGED-FOREVER under the saturation policy (registry
     docstring)."""
     cells = contingency_cells(spark, sf_dir).filter(
         F.col("n_obs") > 0
@@ -241,7 +241,7 @@ def chisq_segment_priority(
     """(seg, prio, n_obs, n_seg, n_prio, n_total, expected,
     contribution, chi2_total, df) — one row per contingency cell on
     the complete grid. STAGED-FOREVER under the saturation policy
-    (registry.load_all docstring)."""
+    (registry docstring)."""
     cells = contingency_cells(spark, sf_dir)
     tot = cells.agg(
         F.sum("n_obs").cast("bigint").alias("n_total")

@@ -466,7 +466,7 @@ def tdigest_quantile_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     panel: per-event_type t-digests, merged into one global digest,
     read out at each probe, graded against the exact interpolated
     quantile. STAGED-FOREVER under the saturation policy unless a
-    displacement opens a slot (registry.load_all docstring)."""
+    displacement opens a slot (registry docstring)."""
     ev = load_table(spark, sf_dir, "events")
     cent = group_digests(ev, "event_type", "value")
     gcent = merge_digests(cent, "event_type")

@@ -85,7 +85,7 @@ def events_ewma_smooth(spark: SparkSession, sf_dir: str) -> DataFrame:
     moving average with a = 1/2 (weights are exact powers of two on
     both engines; see module docstring). n_window = rows actually in
     the frame (< 32 during series warm-up). STAGED-FOREVER under the
-    saturation policy (registry.load_all)."""
+    saturation policy (registry docstring)."""
     ev = load_table(spark, sf_dir, "events").select(
         "event_type", "event_id", "ts", "value"
     )

@@ -10,475 +10,91 @@ queries are declarative plans, not imperative task bodies.
 Column-name contract: Spark result and oracle result must have
 identical column names (driver compares after sorting columns by
 name), so every computed column is aliased on both sides.
+
+Two registries share one name space:
+
+- ``QUERIES``/``ORACLES`` (``@query``): the driver-visible surface.
+  Which 50 of them the driver re-checks each round is derived from
+  the evidence on disk by ``__spark_entry__.queries()`` (stalest
+  first), so registration order carries no meaning.
+- ``STAGED_QUERIES``/``STAGED_ORACLES`` (``@staged_query``): the same
+  callable and oracle contract, parity-tested every run but never
+  handed to the driver.
+
+Saturation policy: the registered surface is capped at 200
+(tests/test_registry.py pins it). A new operator either DISPLACES a
+registered query in the same round, or ships STAGED-FOREVER as a
+``@staged_query``. A displaced query demotes to ``@staged_query``
+and the retirement is recorded in PLANS.md, under one of three
+criteria: (i) another registered query strictly subsumes its plan
+coverage; (ii) it is an anti-pattern demo whose fixed twin stays
+registered; (iii) its operator left the engine surface.
 """
 
 from __future__ import annotations
 
+import importlib
+import pkgutil
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
-# an oracle is DuckDB SQL, or a zero-arg callable returning it —
-# LAZY oracles exist for composed oracles (curation_funnel) whose
-# text embeds OTHER queries' oracle SQL: building the string at
-# decoration time forces the component modules to be imported before
-# the composing module, which drags their registrations into the
-# driver's first-WINDOW correctness window as riders and breaks the
-# rotation arithmetic (the funnel's components alone are 12+ rider
-# slots). A callable defers both the imports and the composition to
-# first use, when load_all has long finished.
 
 QUERIES: dict[str, QueryFn] = {}
-ORACLES: dict[str, object] = {}
-
-
-def resolve_oracle(value: object) -> str:
-    """An oracle dict value → its SQL text (callables are lazy
-    composers — see the Oracle note above)."""
-    return value() if callable(value) else value
-
-
-def oracle_for(name: str) -> str | None:
-    """Resolved oracle SQL for a registered query, or None."""
-    v = ORACLES.get(name)
-    return None if v is None else resolve_oracle(v)
-
-
-def query(name: str, oracle=None) -> Callable[[QueryFn], QueryFn]:
-    """Register a query; ``oracle`` is DuckDB SQL, a zero-arg
-    callable returning it, or None (rows-only check)."""
-
-    def deco(fn: QueryFn) -> QueryFn:
-        if name in QUERIES:
-            raise ValueError(f"duplicate query name: {name}")
-        QUERIES[name] = fn
-        if oracle is not None:
-            ORACLES[name] = oracle
-        return fn
-
-    return deco
-
-
-# how many registrations the driver's per-round correctness window
-# covers — load_all() asserts the window modules sum to exactly this
-WINDOW = 50
-
-# Queries STAGED for the next round's correctness window. When the
-# current round's 50 window slots are already spoken for, a brand-new
-# @query would have to register OUTSIDE the window and could never
-# earn a driver stamp this round (tests/test_registry.py::
-# test_never_stamped_queries_inside_window forbids exactly that
-# state). Staging keeps the discipline without the premature
-# registration: a staged query carries the same (spark, sf_dir) ->
-# DataFrame callable and DuckDB oracle, is parity-checked in-process
-# every test run (tests/test_staged_parity.py), and promotion next
-# round is mechanical — swap the decorator to @query and move the
-# module import into load_all()'s window section.
+ORACLES: dict[str, str] = {}
 STAGED_QUERIES: dict[str, QueryFn] = {}
-STAGED_ORACLES: dict[str, object] = {}
+STAGED_ORACLES: dict[str, str] = {}
+
+# the subpackages whose modules register queries
+_PACKAGES = ("functions", "operators", "streaming")
 
 
-def staged_query(name: str, oracle=None) -> Callable[[QueryFn], QueryFn]:
-    """Register a next-round query candidate (oracle-parity-tested
-    now, driver-visible after promotion). ``oracle`` as for
-    :func:`query` — SQL text or a lazy zero-arg composer."""
-
+def _register(
+    queries: dict[str, QueryFn],
+    oracles: dict[str, str],
+    name: str,
+    oracle: str | None,
+) -> Callable[[QueryFn], QueryFn]:
     def deco(fn: QueryFn) -> QueryFn:
-        if name in STAGED_QUERIES or name in QUERIES:
+        if name in QUERIES or name in STAGED_QUERIES:
             raise ValueError(f"duplicate query name: {name}")
-        STAGED_QUERIES[name] = fn
+        queries[name] = fn
         if oracle is not None:
-            STAGED_ORACLES[name] = oracle
+            oracles[name] = oracle
         return fn
 
     return deco
 
 
-def load_staged() -> None:
-    """Import the modules holding staged (next-round) queries. Kept
-    OUT of load_all() so the driver's first-WINDOW registration
-    bookkeeping is untouched; tests call this explicitly.
+def query(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryFn]:
+    """Register a driver-visible query; ``oracle`` is DuckDB SQL or
+    None (rows-only check)."""
+    return _register(QUERIES, ORACLES, name, oracle)
 
-    A staged query living in a MIXED module that also registers
-    @query entries (the r9-r11 text_winnow / multimodal_image case)
-    would, if imported in a pristine process before load_all(), land
-    those @query registrations at early QUERIES positions and
-    silently shift the first-WINDOW cut line — so load_all() runs
-    first here, making the call order irrelevant.
 
-    r13 state: both r12-staged queries (quality_ccnet_buckets,
-    cdc_merge_upsert_orders) were PROMOTED into the r13 window —
-    their imports live in load_all() now. The registry is at the
-    200-query ceiling (see the saturation policy in load_all's
-    docstring): new staged queries from here on are STAGED-FOREVER
-    library surface unless they displace a retired registered query,
-    and they are parity-tested every run via
-    tests/test_staged_parity.py just the same."""
-    if not QUERIES:
-        load_all()
-    # (Both r13 staged queries are PROMOTED now: text_bm25_topk in
-    # the r15 displacement, streaming_postcompaction_neardup_flags
-    # in the r16 one — their imports live in load_all()'s window
-    # sections.)
-    # r15/r16 RETIREES: join_semi_active_customers and
-    # rollup_lineitem_flags demoted to @staged_query (displacement
-    # criterion (i), PLANS.md r15/r16). Both live in the MIXED
-    # module operators/relational.py, which load_all() above already
-    # imported — nothing to import here; their staged registrations
-    # happened during load_all.
-    # STAGED-FOREVER (r14): the classic-sketch trio — count-min
-    # heavy hitters (frequency), the Bloom decontamination pre-filter
-    # (membership) and KMV source-overlap (cardinality/Jaccard).
-    from dist_map_reduce_spark.functions import text_bloom  # noqa: F401
-    from dist_map_reduce_spark.functions import text_cms  # noqa: F401
-    from dist_map_reduce_spark.functions import text_kmv  # noqa: F401
-    # STAGED-FOREVER (r15): t-digest quantile merge — the mergeable-
-    # summaries complement to the sketch trio (VERDICT r14 #6's
-    # named candidate), grade-the-contract certified.
-    from dist_map_reduce_spark.operators import tdigest  # noqa: F401
-    # STAGED-FOREVER (r15): theta-sketch set algebra — union /
-    # intersection / difference cardinalities per source pair from
-    # the SAME bottom-K signatures as text_kmv (shared persist slot).
-    from dist_map_reduce_spark.functions import text_theta  # noqa: F401
-    # STAGED-FOREVER (r15): native HLL — count-distinct registers
-    # built in-plan (md5 buckets, integer-CASE ranks) so the estimate
-    # itself certifies exactly cross-engine, incl. the in-plan merge.
-    from dist_map_reduce_spark.operators import hll_native  # noqa: F401
-    # STAGED-FOREVER (r15): length-bucketed padding-waste — the
-    # batch-provisioning datum (power-of-two classes, truncation
-    # accounting, per-class + total waste fractions).
-    from dist_map_reduce_spark.functions import length_buckets  # noqa: F401
-    # STAGED-FOREVER (r16): mergeable reservoir sampling — bottom-K
-    # by deterministic md5 race tag, per-source reservoirs merged
-    # into the global reservoir with the merge certified rank-for-
-    # rank against the direct bottom-K (VERDICT r15 #2's named
-    # candidate, completing the mergeable-summaries family).
-    from dist_map_reduce_spark.functions import reservoir  # noqa: F401
-    # STAGED-FOREVER (r16): EWMA smoothing — bounded-window
-    # adjust=True exponential moving average per event series, all
-    # weights exact powers of two (no transcendental pow on either
-    # engine), the recency-weighted complement to the box-filter
-    # moving average.
-    from dist_map_reduce_spark.operators import timeseries_ewma  # noqa: F401
-    # STAGED-FOREVER (r16): recursive CTE hierarchy traversal — the
-    # first exercise of Spark 4's WITH RECURSIVE (SPARK-24497):
-    # depth-level rollup of the parent(k) = k DIV 2 order forest,
-    # log-bounded recursion, shared SQL text across engines.
-    from dist_map_reduce_spark.operators import recursion  # noqa: F401
-    # STAGED-FOREVER (r16): watermarked stream-stream LEFT OUTER
-    # join — null-padded emission driven by state expiry, the oracle
-    # re-deriving Spark's min-policy ms-floored watermark cut.
-    from dist_map_reduce_spark.streaming import outer_join  # noqa: F401
-    # STAGED-FOREVER (r16): streaming HLL — per-micro-batch register
-    # tables max-merged across 4 real replay batches, estimate read
-    # out with hll_native's transcendental-free estimator; the
-    # oracle's one-pass rebuild certifies merge == one-pass.
-    from dist_map_reduce_spark.streaming import hll_stream  # noqa: F401
-    # STAGED-FOREVER (r16): custom Python Data Source (SPARK-44076)
-    # — deterministic md5-derived synthetic table generated by a
-    # registered DataSource, value-certified by the oracle's
-    # generate_series replay of the same spec.
-    from dist_map_reduce_spark.operators import python_datasource  # noqa: F401,E501
-    # STAGED-FOREVER (r16): incremental aggregate maintenance (IVM)
-    # — the cdc_merge change feed folded into a materialized per-
-    # group aggregate as signed deltas (delta-sized work), certified
-    # in-plan against the full recompute with exact DECIMAL equality.
-    from dist_map_reduce_spark.operators import agg_ivm  # noqa: F401
-    # STAGED-FOREVER (r16): PPJoin exact set-similarity join —
-    # prefix-filtered inverted index (lossless by the prefix-filter
-    # theorem), cross-multiplied integer threshold, completeness
-    # certified by the in-output cap counter + brute-force test.
-    from dist_map_reduce_spark.functions import dedup_ppjoin  # noqa: F401,E501
-    # STAGED-FOREVER (r16): PSI distribution-drift monitor — base vs
-    # CDC-merged price distribution over integer equi-width buckets,
-    # Laplace-smoothed, round-after-ln; the bucket=-1 total row is
-    # the drift scalar.
-    from dist_map_reduce_spark.operators import drift  # noqa: F401
-    # STAGED-FOREVER (r16): mapInArrow text statistics — the UDF
-    # surface's zero-copy member (pyarrow.compute kernels over the
-    # plan's RecordBatches, no pandas), JVM twin pinned row-for-row.
-    from dist_map_reduce_spark.functions import arrow_native  # noqa: F401,E501
-    # STAGED-FOREVER (r16): LATERAL correlated derived table with
-    # LIMIT — top-N-per-key as SQL writes it, decorrelated by Spark
-    # into WindowGroupLimit + one equi-join (plan-pinned), completing
-    # the Spark-4 surface story (UDTF/VARIANT/RECURSIVE/DataSource).
-    from dist_map_reduce_spark.operators import lateral  # noqa: F401
-    # STAGED-FOREVER (r16): streaming reservoir sample — bottom-K
-    # race tags as micro-batch state (idempotent merge, K-row state
-    # forever); full value-hash parity against the one-pass bottom-K
-    # IS the mergeability certification.
-    from dist_map_reduce_spark.streaming import reservoir_stream  # noqa: F401,E501
-    # STAGED-FOREVER (r16): exact-budget stratified sampling —
-    # Hamilton largest-remainder apportionment (integer end-to-end)
-    # over per-source doc counts, sample content certified by the
-    # sampled-id sum, sum(quota) == BUDGET pinned by a total row.
-    from dist_map_reduce_spark.functions import sampling_strata  # noqa: F401,E501
-    # STAGED-FOREVER (r16): AMS / count-sketch second frequency
-    # moment — signed counter grids per source, element-wise-sum
-    # merge certified in-plan, exact median over R rows graded
-    # against the exact F2 (the frequency-moment class completing
-    # the mergeable-summaries family).
-    from dist_map_reduce_spark.functions import text_ams  # noqa: F401
-    # STAGED-FOREVER (r16): Misra-Gries mergeable heavy hitters —
-    # the counter-based summary class (deterministic, one-sided,
-    # PODS-2012 merge bound), per-source batch-MG summaries merged
-    # with the subtract-(k+1)-th-largest rule, the theorem itself
-    # certified as the within_bound output column.
-    from dist_map_reduce_spark.functions import text_mg  # noqa: F401
-    # STAGED-FOREVER (r16): market-basket association rules —
-    # support/confidence/lift over distinct-brand order baskets,
-    # lift > 1 certified by cross-multiplied integer comparison
-    # (no float-boundary hole), rule universe bounded by the brand
-    # dimension so the output is audit-sized at any corpus scale.
-    from dist_map_reduce_spark.operators import association  # noqa: F401
-    # STAGED-FOREVER (r16): strictly-ordered first-touch conversion
-    # funnel — per-step user counts via shrinking user-scale
-    # frontiers (one pushdown-filtered scan + one user_id shuffle
-    # per step), conversions as seam-rounded single divisions.
-    from dist_map_reduce_spark.operators import funnel  # noqa: F401
-    # STAGED-FOREVER (r16): adjacent-bigram PMI collocations —
-    # one wordcount-shaped corpus aggregation, vocabulary-scale
-    # margins/joins, positivity certified by exact DECIMAL(18,0)
-    # cross-multiplication (no float-boundary hole).
-    from dist_map_reduce_spark.functions import text_pmi  # noqa: F401
-    # STAGED-FOREVER (r16): chi-square independence test — complete
-    # contingency grid (zero cells materialized via constant-key
-    # grid join), dimension-bounded algebra, one corpus-scale join
-    # + groupBy; chi2_total's 25-addend sum absorbed by the 6-dp
-    # seam round.
-    from dist_map_reduce_spark.operators import stats_chisq  # noqa: F401
-    # STAGED-FOREVER (r16): Benford first-digit audit — exact
-    # integer-cents digit extraction (no log10/floor), ln-only
-    # expected proportions, 9-row complete grid, one 9-cell
-    # map-side-partial corpus aggregation.
-    from dist_map_reduce_spark.operators import benford  # noqa: F401
-    # STAGED-FOREVER (r16): last-touch attribution — one user-keyed
-    # window over the unique (ts, event_id) order, channel-bounded
-    # aggregate; corpus double sums absorbed by the seam round.
-    from dist_map_reduce_spark.operators import attribution  # noqa: F401
-    # STAGED-FOREVER (r16): session path mining — gap sessions +
-    # first-K paths as packed-bigint aggregation state (pure
-    # LongType HashAggregates at corpus scale), decode on the
-    # path-bounded table; independent string_agg oracle.
-    from dist_map_reduce_spark.operators import session_paths  # noqa: F401
-    # STAGED-FOREVER (r16): RFM segmentation — cutpoint quintiles
-    # (four scalars per dim, map-side scoring; no global ntile
-    # sort), exact integer R/F/M inputs, <= 5^3-row grid.
-    from dist_map_reduce_spark.operators import rfm  # noqa: F401
-    # STAGED-FOREVER (r16): two-proportion A/B z-test — exact-count
-    # arms, fixed-shape IEEE algebra (sqrt is IEEE-exact), 1-row
-    # output; no significance boolean by design (float boundary).
-    from dist_map_reduce_spark.operators import abtest  # noqa: F401
-    # STAGED-FOREVER (r16): weekly seasonality profile — one
-    # 168-cell map-side-partial groupBy with (n, Σx, Σx²), ANOVA
-    # R² variance-explained as the certified scalar.
-    from dist_map_reduce_spark.operators import seasonality  # noqa: F401
-    # STAGED-FOREVER (r16): Lorenz/Gini concentration — shared RFM
-    # rollup slot, aggregate-sized rank sort (contribution_abc
-    # posture), integer-rank deciles, 10-row output.
-    from dist_map_reduce_spark.operators import inequality  # noqa: F401
+def staged_query(
+    name: str, oracle: str | None = None
+) -> Callable[[QueryFn], QueryFn]:
+    """Register a staged query (parity-tested, not driver-visible);
+    ``oracle`` as for :func:`query`."""
+    return _register(STAGED_QUERIES, STAGED_ORACLES, name, oracle)
+
+
+def resolve_oracle(value: str) -> str:
+    """SQL text of an ``ORACLES``/``STAGED_ORACLES`` value. Every
+    oracle is eager text, so this is the identity."""
+    return value
 
 
 def load_all() -> None:
-    """Import every operator module so registrations run.
+    """Import every module under ``functions/``, ``operators/`` and
+    ``streaming/`` so their registrations run. Idempotent; the import
+    order does not matter."""
+    for sub in _PACKAGES:
+        pkg = importlib.import_module(f"{__package__}.{sub}")
+        for mod in pkgutil.iter_modules(pkg.__path__):
+            importlib.import_module(f"{pkg.__name__}.{mod.name}")
 
-    ORDER MATTERS for evidence, not semantics: the verify harness
-    records correctness rows for the first ``WINDOW`` registrations
-    per round, so modules rotate toward the stalest driver stamps
-    (the guard tests in tests/test_registry.py derive staleness from
-    the CORRECTNESS_r*.json files on disk). The assert after the
-    window imports is the rotation bookkeeping — if adding a query
-    to a window module silently changed the cut line, it fires.
 
-    Round 16 (EXECUTED this round — rotation + the SECOND executed
-    displacement): window = the post-cascade r12 cohort, minus the
-    hopped ``text_char_entropy``, plus the promoted
-    ``streaming_postcompaction_neardup_flags``, in 21 module-pure
-    imports — functions: similarity (7), curation_ext (4), packing
-    (2), and singles ann_recall / graph / multimodal_audio /
-    sampling_aes / similarity_ivf_kmeans / similarity_ivfadc_query /
-    similarity_ivfpq / similarity_pq; operators: tpch_full (7),
-    tpch_partsupp (5), approx (4), json_ops (4), wordcount (3),
-    timeseries_fill (2), and singles linkage / zorder (cascaded in
-    r15, re-stamped HERE — its r11 stamp was the oldest on the
-    board); streaming: ingest_index_compaction (1),
-    postcompaction_flags (1, PROMOTED). 7+4+2+8 + 7+5+4+4+3+2+2
-    + 2 = 50 exactly (fresh-process probe re-verified at round
-    open). The r15 window modules moved to the outside-window
-    section.
-
-    DISPLACEMENT r16 (criterion (i), record in PLANS.md r16):
-    ``rollup_lineitem_flags`` retired to @staged_query
-    (``grouping_sets_orders`` + ``cube_orders_status_priority`` pin
-    the same Expand machinery in general/sugared form) and
-    ``streaming_postcompaction_neardup_flags`` took the slot.
-    Because the retiree sits in the r10 cohort while the promotion
-    needed a CURRENT-window stamp, two single-query modules hop one
-    cohort each: text_entropy (stamp r12 → joins the r13 cohort,
-    re-stamped r17 — legal at the r16 close, floor=12) and
-    quality_ccnet_buckets (stamp r13 → joins the r10 cohort,
-    re-stamped r18 in rollup's vacated relational slot — legal at
-    the r16/r17 closes, floors 12/13). The r15 cascade's remaining
-    movers stay on plan: snapshot_diff (r12) re-stamps r17 in the
-    r13 cohort, delta_merge (r13) re-stamps r18 in the r10 cohort.
-
-    SATURATION POLICY (in force since r14 — the registry holds
-    exactly 200 queries = 4 windows x 50, so every window is a full
-    cohort with zero free slots): the registered surface is CAPPED
-    at 200. The steady-state rotation is mechanical, period 4, with
-    the r15/r16 cascades folded in — r17 re-stamps the r13 cohort,
-    r18 the r10 cohort, r19 the r15 window again, r20 THIS r16
-    window; all cohorts verified module-pure (riders accounted). A
-    NEW operator ships under displace-or-stage:
-
-    r17 plan (pure rotation — NO legal single-module hop exists;
-    verified at r15 close): window = r13 cohort with the cascades
-    applied — clustering 3, dedup 4, semdedup 2, text_bpe 2,
-    text_bpe_encode 4, histogram 3, scalar_fns 4, setops 4,
-    sources_sinks 5, stats 5, timeseries 6, windows 6 +
-    snapshot_diff 1 (r15 cascade, replacing delta_merge) +
-    text_entropy 1 (r16 hop, replacing quality_ccnet_buckets) = 50.
-    r18 window = r10 cohort (relational 15 after the two
-    retirements, pipelines 10, arrays_maps 6, tpch_more 6,
-    subqueries 5, singles bucketing / cohorts / dedup_simhash /
-    sources_sinks_orc / skew / ingest_dedup_query) + delta_merge 1
-    (r15 cascade) + quality_ccnet_buckets 1 (r16 hop, filling
-    rollup's vacated relational slot) = 50. At each round open:
-    re-run the fresh-process probe, swap the window/outside-window
-    sections. PLANNED DISPLACEMENTS on top of this pure rotation
-    (stamp-gap arithmetic verified in PLANS.md r15/r16
-    "Displacement pairing plan"): r18 retires
-    cube_orders_status_priority for text_cms_heavy_hitters
-    (in-window swap against the r10/relational cohort, zero hops);
-    the r19/r20 pairings for the remaining staged queue
-    (Bloom/KMV/t-digest/theta/HLL) are recorded in PLANS.md r16.
-
-    (a) DISPLACE — a new @query may take a slot only by retiring an
-        existing registered query in the same round (net zero).
-        Retirement criteria, any one of: (i) another registered query
-        strictly subsumes its plan coverage (same operator family,
-        superset of pinned plan assertions); (ii) it is a deliberate
-        anti-pattern demo whose paired fixed query remains registered;
-        (iii) its operator was removed from the engine surface. A
-        retired query demotes to @staged_query (staged-forever), so
-        its oracle parity is still tested every run — it loses only
-        its driver slot. The retirement and its criterion must be
-        recorded in PLANS.md. The swap must keep the retiree's cohort
-        module-pure (retire whole modules or swap within one cohort),
-        or the displacing query joins the retiree's cohort position.
-
-    (b) STAGE-FOREVER — otherwise the new operator ships as library
-        functions + a @staged_query with a DuckDB oracle, parity-
-        tested every run by tests/test_staged_parity.py and
-        bench-tracked (tests/test_registry.py::
-        test_staged_queries_are_bench_tracked). This is continuous
-        in-repo evidence, weaker only in that the driver never stamps
-        it; the judge sees which via STAGED_QUERIES.
-
-    The cap is guard-tested: tests/test_registry.py::
-    test_registry_holds_at_saturation_ceiling pins the fresh-process
-    total at exactly 200, so an unpaired registration (which would
-    silently stretch the staleness cadence to ceil(201/50) = 5 and
-    break the four-round module-pure rotation) fails fast. The
-    authoritative staleness list stays derivable from the evidence
-    files, which is what tests/test_registry.py checks.
-    """
-    # --- inside the WINDOW-slot correctness window ---
-    pristine = not QUERIES  # tests may import operator modules first
-    # 21 modules holding 48 post-cascade r12-cohort names +
-    # zorder_events_keys (r15 cascade, stalest stamp on the board) +
-    # the r16-promoted streaming_postcompaction_neardup_flags
-    # (nothing else; text_entropy hopped OUT to the r13 cohort)
-    from dist_map_reduce_spark.functions import ann_recall  # noqa: F401
-    from dist_map_reduce_spark.functions import curation_ext  # noqa: F401
-    from dist_map_reduce_spark.functions import graph  # noqa: F401
-    from dist_map_reduce_spark.functions import multimodal_audio  # noqa: F401
-    from dist_map_reduce_spark.functions import packing  # noqa: F401
-    from dist_map_reduce_spark.functions import sampling_aes  # noqa: F401
-    from dist_map_reduce_spark.functions import similarity  # noqa: F401
-    from dist_map_reduce_spark.functions import similarity_ivf_kmeans  # noqa: F401
-    from dist_map_reduce_spark.functions import similarity_ivfadc_query  # noqa: F401
-    from dist_map_reduce_spark.functions import similarity_ivfpq  # noqa: F401
-    from dist_map_reduce_spark.functions import similarity_pq  # noqa: F401
-    from dist_map_reduce_spark.operators import approx  # noqa: F401
-    from dist_map_reduce_spark.operators import json_ops  # noqa: F401
-    from dist_map_reduce_spark.operators import linkage  # noqa: F401
-    from dist_map_reduce_spark.operators import timeseries_fill  # noqa: F401
-    from dist_map_reduce_spark.operators import tpch_full  # noqa: F401
-    from dist_map_reduce_spark.operators import tpch_partsupp  # noqa: F401
-    from dist_map_reduce_spark.operators import wordcount  # noqa: F401
-    from dist_map_reduce_spark.operators import zorder  # noqa: F401
-    from dist_map_reduce_spark.streaming import ingest_index_compaction  # noqa: F401
-    from dist_map_reduce_spark.streaming import postcompaction_flags  # noqa: F401
-
-    # the window cut-line guard only holds in a fresh process (the
-    # driver's import path); when a test pre-imports operator
-    # modules the registration order is already perturbed and the
-    # count says nothing. RuntimeError, not assert — the guard must
-    # survive ``python -O``.
-    if pristine and len(QUERIES) != WINDOW:
-        raise RuntimeError(
-            f"correctness-window bookkeeping is off: the window imports "
-            f"register {len(QUERIES)} queries, expected {WINDOW}"
-        )
-
-    # --- outside the window: driver-green in r13-r15, unchanged ---
-    from dist_map_reduce_spark.functions import (  # noqa: F401
-        chunking,
-        clustering,
-        curation,
-        curation_funnel,
-        dedup,
-        dedup_simhash,
-        embedding_pca,
-        lm_bigram,
-        lm_score,
-        multimodal,
-        multimodal_ext,
-        multimodal_image,
-        python_udfs,
-        quality_ccnet_buckets,
-        quality_model,
-        resample_weighted,
-        semdedup,
-        shard_export,
-        text,
-        text_bm25,
-        text_boilerplate,
-        text_bpe,
-        text_bpe_encode,
-        text_dupngrams,
-        text_entropy,
-        text_winnow,
-    )
-    from dist_map_reduce_spark.operators import (  # noqa: F401
-        arrays_maps,
-        bucketing,
-        cohorts,
-        contribution,
-        delta_merge,
-        etl,
-        histogram,
-        intervals,
-        profiling,
-        relational,
-        scalar_fns,
-        scd,
-        sequences,
-        setops,
-        skew,
-        skyline,
-        snapshot_diff,
-        sources_sinks,
-        sources_sinks_orc,
-        stats,
-        stats_robust,
-        subqueries,
-        timeseries,
-        tpch_more,
-        windows,
-    )
-    from dist_map_reduce_spark.streaming import ingest_dedup_query  # noqa: F401
-    from dist_map_reduce_spark.streaming import pipelines  # noqa: F401
-    from dist_map_reduce_spark.streaming import wordcount_stream  # noqa: F401
+load_staged = load_all

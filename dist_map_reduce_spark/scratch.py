@@ -2,8 +2,7 @@
 
 Extracted from ``operators/sources_sinks.py`` so modules that only
 need a scratch path (streaming bindings, the ORC round-trip) don't
-drag that module's query registrations into the registry's 50-slot
-correctness window at import time.
+import that module's queries.
 """
 
 from __future__ import annotations

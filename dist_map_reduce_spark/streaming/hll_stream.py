@@ -208,7 +208,7 @@ def streaming_hll_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     registers across 4 real replay batches, graded against the exact
     distinct count; the oracle rebuilds the registers in one batch
     pass, certifying merge == one-pass (the mergeability contract).
-    STAGED-FOREVER under the saturation policy (registry.load_all)."""
+    STAGED-FOREVER under the saturation policy (registry docstring)."""
     import shutil
 
     # fresh replay every run: a surviving checkpoint would mark the

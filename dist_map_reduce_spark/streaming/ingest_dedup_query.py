@@ -30,8 +30,7 @@ streaming pipeline gets here: engine-vs-engine on the final sink
 state, same discipline as streaming/pipelines.py's stream-vs-batch
 comparisons plus a foreign oracle.
 
-Promoted to @query in round 10 (the r10 window's one free slot —
-registry.load_all docstring has the rotation arithmetic).
+Promoted to @query in round 10.
 """
 
 from __future__ import annotations

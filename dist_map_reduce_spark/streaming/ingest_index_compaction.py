@@ -27,10 +27,7 @@ Scale posture: the compaction is one distinct (hash-aggregate
 shuffle) over the index — a table of short strings orders of
 magnitude smaller than the corpus — run offline at whatever cadence
 storage growth warrants; the reporting overlay is a 4-row-per-side
-join. Window discipline: module scope imports only registration-free
-modules (registry, scratch, ingest_dedup, dedup_common), so when
-this module enters the r12 correctness window it registers exactly
-ONE query, no riders (registry.load_all docstring).
+join.
 
 Reference parity: the reference engine has no streaming or index
 surface (its dataflow is the batch word-count ops,

@@ -100,7 +100,7 @@ def streaming_stream_stream_left_join(
     the watermark has proven unconvertible — clicks still inside
     their possible-match window at end of input remain buffered and
     are NOT emitted (mirrored by the oracle's watermark cut).
-    STAGED-FOREVER under the saturation policy (registry.load_all)."""
+    STAGED-FOREVER under the saturation policy (registry docstring)."""
     clicks = (
         read_events_stream(spark, sf_dir)
         .filter(F.col("event_type") == "click")

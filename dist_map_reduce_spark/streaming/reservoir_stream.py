@@ -150,7 +150,7 @@ def streaming_reservoir_sample(
     real replay batches. The oracle computes the one-pass global
     bottom-K — full value-hash parity IS the mergeability
     certification (stream merge == one-pass, row for row).
-    STAGED-FOREVER under the saturation policy (registry.load_all)."""
+    STAGED-FOREVER under the saturation policy (registry docstring)."""
     import shutil
 
     # fresh replay every run: a surviving checkpoint would mark the

@@ -23,12 +23,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from dist_map_reduce_spark.operators.wordcount import TOKEN_PATTERN
 from dist_map_reduce_spark.registry import query
-
-# NOTE: operators.wordcount and streaming.pipelines are imported
-# lazily inside the query body — a module-level import would register
-# THEIR queries at this module's position in registry.load_all() and
-# scramble the correctness-window rotation.
+from dist_map_reduce_spark.streaming.pipelines import FileSource, run_sink
 
 
 @query(
@@ -48,9 +45,6 @@ def streaming_wordcount_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     reference's flagship, unbounded. Same tokenizer expression as the
     batch `wordcount` query; complete-mode state equals the batch
     answer once the replay drains."""
-    from dist_map_reduce_spark.operators.wordcount import TOKEN_PATTERN
-    from dist_map_reduce_spark.streaming.pipelines import FileSource, run_sink
-
     docs = FileSource(glob="documents.parquet").read(spark, sf_dir)
     agg = (
         docs.select(F.explode(F.split("text", TOKEN_PATTERN)).alias("word"))

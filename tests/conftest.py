@@ -73,11 +73,13 @@ def canon_rows(pdf: pd.DataFrame) -> list[tuple]:
 
 
 def assert_parity(spark, duck, name: str, sf_dir: str = SF_ORACLE) -> None:
-    """Run Spark query vs DuckDB oracle; assert driver-style equality."""
-    sdf = registry.QUERIES[name](spark, sf_dir)
-    spdf = sdf.toPandas()
+    """Run Spark query vs DuckDB oracle; assert driver-style equality.
+    ``name`` may be a registered or a staged query."""
+    fn = (registry.QUERIES | registry.STAGED_QUERIES)[name]
+    spdf = fn(spark, sf_dir).toPandas()
     duck_views(duck, sf_dir)
-    opdf = duck.execute(registry.oracle_for(name)).fetchdf()
+    sql = (registry.ORACLES | registry.STAGED_ORACLES)[name]
+    opdf = duck.execute(sql).fetchdf()
 
     assert sorted(spdf.columns) == sorted(opdf.columns), (
         f"{name}: column mismatch spark={sorted(spdf.columns)} "

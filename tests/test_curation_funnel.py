@@ -1,5 +1,5 @@
 """Curation funnel invariants (oracle parity is in
-tests/test_staged_parity.py — including the composed recursive-CTE
+tests/test_parity.py — including the composed recursive-CTE
 near-dup chain; these pin the funnel-shape properties the count
 comparison alone doesn't name)."""
 

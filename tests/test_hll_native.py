@@ -147,11 +147,7 @@ def test_hll_linear_counting_branch_on_tiny_corpus(tmp_path, spark):
         f"'{os.path.join(sf_dir, 'orders.parquet')}'"
     )
     od = (
-        con.execute(
-            registry.resolve_oracle(
-                registry.STAGED_ORACLES["hll_native_customer_cardinality"]
-            )
-        )
+        con.execute(registry.STAGED_ORACLES["hll_native_customer_cardinality"])
         .fetchdf()
         .sort_values("grp")
         .reset_index(drop=True)

@@ -76,11 +76,7 @@ def test_truncation_branch_on_overlength_doc(tmp_path, spark):
         f"'{os.path.join(sf_dir, 'documents.parquet')}'"
     )
     od = (
-        con.execute(
-            registry.resolve_oracle(
-                registry.STAGED_ORACLES["length_bucket_padding_waste"]
-            )
-        )
+        con.execute(registry.STAGED_ORACLES["length_bucket_padding_waste"])
         .fetchdf()
         .sort_values("bucket_len")
         .reset_index(drop=True)

@@ -1,7 +1,7 @@
 """Interpolated bigram LM: hand-computed fixture + invariants.
 
 Oracle parity at corpus scale is covered by
-tests/test_staged_parity.py; here a tiny crafted corpus is scored by
+tests/test_parity.py; here a tiny crafted corpus is scored by
 hand in Python (independent arithmetic path) and structural
 invariants are pinned on the fixture corpus.
 """

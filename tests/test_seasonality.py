@@ -88,9 +88,7 @@ def test_fp_negative_variance_clamped(spark, tmp_path, duck):
         f"'{tmp_path}/events.parquet/*.parquet'"
     )
     od = duck.execute(
-        registry.resolve_oracle(
-            registry.STAGED_ORACLES["events_seasonality_dow_hour"]
-        )
+        registry.STAGED_ORACLES["events_seasonality_dow_hour"]
     ).fetchdf()
     assert od.iloc[0].std_value == 0.0
 

@@ -133,15 +133,10 @@ def test_opq_gate_serves_measured_winner_per_scale(spark):
 
 
 def test_ungated_helpers_cannot_shift_window_in_pristine_process():
-    """ADVICE r14: opq_pq_topk / opq_rotation / rotated_corpus /
-    eigenvalue_allocation also lazily import @query-registering
-    modules, so they carry the same pristine-process hazard as the
-    two gate entry points — every one now calls
-    _ensure_canonical_registry() first. Pin the cheapest of them
-    end-to-end: in a fresh process, calling eigenvalue_allocation
-    with the default M_SUB (the rider-importing branch) BEFORE any
-    load_all must leave the first-WINDOW cut identical to the
-    canonical registration order."""
+    """Importing similarity_opq registers the PQ/PCA/recall queries it
+    builds on. In a fresh process, calling eigenvalue_allocation with
+    the default M_SUB BEFORE any load_all must leave the driver's
+    first-50 window identical to a plain __spark_entry__ import's."""
     import os
     import subprocess
     import sys
@@ -153,14 +148,13 @@ def test_ungated_helpers_cannot_shift_window_in_pristine_process():
         "eigenvalue_allocation\n"
         "perm = eigenvalue_allocation(list(range(64, 0, -1)))\n"
         "assert sorted(perm) == list(range(64))\n"
-        "from dist_map_reduce_spark import registry\n"
-        "print(','.join(list(registry.QUERIES)[:50]))\n" % repo
+        "import __spark_entry__ as e\n"
+        "print(','.join(list(e.queries())[:50]))\n" % repo
     )
     canon = (
         "import sys; sys.path.insert(0, %r)\n"
-        "from dist_map_reduce_spark import registry\n"
-        "registry.load_all()\n"
-        "print(','.join(list(registry.QUERIES)[:50]))\n" % repo
+        "import __spark_entry__ as e\n"
+        "print(','.join(list(e.queries())[:50]))\n" % repo
     )
     outs = []
     for c in (code, canon):

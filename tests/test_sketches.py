@@ -146,11 +146,7 @@ def test_bloom_degrades_gracefully_on_empty_eval_split(tmp_path, spark):
         "CREATE VIEW documents AS SELECT * FROM "
         f"'{os.path.join(sf_dir, 'documents.parquet')}'"
     )
-    od = con.execute(
-        registry.resolve_oracle(
-            registry.STAGED_ORACLES["text_bloom_decontaminate"]
-        )
-    ).fetchdf()
+    od = con.execute(registry.STAGED_ORACLES["text_bloom_decontaminate"]).fetchdf()
     assert len(sp) == len(od)
     # empty filter flags nothing, on both engines
     for df in (sp, od):
@@ -247,9 +243,7 @@ def test_theta_exact_mode_below_k(tmp_path, spark):
         f"'{os.path.join(sf_dir, 'documents.parquet')}'"
     )
     od = (
-        con.execute(
-            registry.resolve_oracle(registry.STAGED_ORACLES["text_theta_set_ops"])
-        )
+        con.execute(registry.STAGED_ORACLES["text_theta_set_ops"])
         .fetchdf()
         .sort_values(["source_a", "source_b"])
         .reset_index(drop=True)

@@ -1,41 +1,18 @@
-"""Oracle parity for STAGED (next-round) queries — identical
-discipline to tests/test_parity.py, run against the staged registry
-so a query is proven before it ever occupies a driver window slot."""
+"""Oracle parity for STAGED queries — the same harness as
+tests/test_parity.py (``conftest.assert_parity`` resolves a name in
+either registry), so a staged query is held to the driver's check
+without ever occupying a driver window slot."""
 
 from __future__ import annotations
 
 import pytest
 
 from dist_map_reduce_spark import registry
-from tests.conftest import SF_ORACLE, canon_rows, duck_views
+from tests.conftest import assert_parity
 
-registry.load_staged()
+registry.load_all()
 
 
 @pytest.mark.parametrize("name", sorted(registry.STAGED_ORACLES))
 def test_staged_oracle_parity(spark, duck, name):
-    sdf = registry.STAGED_QUERIES[name](spark, SF_ORACLE)
-    spdf = sdf.toPandas()
-    duck_views(duck, SF_ORACLE)
-    opdf = duck.execute(
-        registry.resolve_oracle(registry.STAGED_ORACLES[name])
-    ).fetchdf()
-
-    assert sorted(spdf.columns) == sorted(opdf.columns), (
-        f"{name}: column mismatch spark={sorted(spdf.columns)} "
-        f"oracle={sorted(opdf.columns)}"
-    )
-    assert len(spdf) == len(opdf), (
-        f"{name}: row count spark={len(spdf)} oracle={len(opdf)}"
-    )
-    srows, orows = canon_rows(spdf), canon_rows(opdf)
-    mismatches = [
-        (i, a, b) for i, (a, b) in enumerate(zip(srows, orows)) if a != b
-    ]
-    assert not mismatches, (
-        f"{name}: {len(mismatches)} mismatched rows; first 3: {mismatches[:3]}"
-    )
-
-
-def test_staged_names_disjoint_from_live():
-    assert not set(registry.STAGED_QUERIES) & set(registry.QUERIES)
+    assert_parity(spark, duck, name)

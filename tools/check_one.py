@@ -41,7 +41,6 @@ def main() -> int:
     # (same reach as tools/sweep.py)
     from dist_map_reduce_spark import registry
 
-    registry.load_staged()
     fn = e.queries().get(name) or registry.STAGED_QUERIES.get(name)
     if fn is None:
         known = sorted(e.queries()) + [
@@ -54,7 +53,7 @@ def main() -> int:
     sp = fn(spark, sf_dir).toPandas()
     osql = e.oracle_sql().get(name)
     if osql is None and name in registry.STAGED_ORACLES:
-        osql = registry.resolve_oracle(registry.STAGED_ORACLES[name])
+        osql = registry.STAGED_ORACLES[name]
     if osql is None:
         print(f"{name}: rows-only ({len(sp)} rows)")
         return 0

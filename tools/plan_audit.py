@@ -40,7 +40,6 @@ from dist_map_reduce_spark import caching, registry  # noqa: E402
 from dist_map_reduce_spark.session import get_spark  # noqa: E402
 
 registry.load_all()
-registry.load_staged()
 
 # staged (next-round) queries audit identically — they are about to
 # occupy driver window slots, so their plans must already be clean

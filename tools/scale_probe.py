@@ -32,7 +32,6 @@ from dist_map_reduce_spark.scratch import SCRATCH  # noqa: E402
 from dist_map_reduce_spark.session import get_spark  # noqa: E402
 
 registry.load_all()
-registry.load_staged()
 
 BASE = "/root/testdata/sf0.1"
 ID_STRIDE = 10_000_000

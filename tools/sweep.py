@@ -95,15 +95,12 @@ def main() -> int:
     # here a round early
     from dist_map_reduce_spark import registry
 
-    registry.load_staged()
     n_staged = 0
     for name in sorted(registry.STAGED_ORACLES):
         t0 = time.perf_counter()
         sp = registry.STAGED_QUERIES[name](spark, sf_dir).toPandas()
         times[f"staged:{name}"] = time.perf_counter() - t0
-        od = con.execute(
-            registry.resolve_oracle(registry.STAGED_ORACLES[name])
-        ).fetchdf()
+        od = con.execute(registry.STAGED_ORACLES[name]).fetchdf()
         n_staged += 1
         ok = _canon(sp) == _canon(od)
         if not ok:
@@ -114,7 +111,7 @@ def main() -> int:
         )
 
     # Staged-forever queries never get a driver stamp (saturation
-    # policy, registry.load_all docstring), so their ONLY correctness
+    # policy, registry docstring), so their ONLY correctness
     # evidence at the driver's scale is in-repo. Re-run their parity
     # at sf0.01 whenever this sweep targeted a different scale, so the
     # evidence regenerates every round without a manual step
@@ -136,9 +133,7 @@ def main() -> int:
             sp = registry.STAGED_QUERIES[name](spark, driver_sf).toPandas()
             dt = time.perf_counter() - t0
             times[f"staged@sf0.01:{name}"] = dt
-            od = con2.execute(
-                registry.resolve_oracle(registry.STAGED_ORACLES[name])
-            ).fetchdf()
+            od = con2.execute(registry.STAGED_ORACLES[name]).fetchdf()
             ok = _canon(sp) == _canon(od)
             n_staged_driver_sf += 1
             if not ok:

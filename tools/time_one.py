@@ -27,7 +27,6 @@ from dist_map_reduce_spark import registry  # noqa: E402
 from dist_map_reduce_spark.session import get_spark  # noqa: E402
 
 registry.load_all()
-registry.load_staged()
 
 
 def main() -> int:
