@@ -141,6 +141,72 @@ def test_queries_order_independent_of_import_order():
         assert json.loads(out.stdout.strip().splitlines()[-1]) == expected
 
 
+def test_staged_modules_register_no_unexpected_riders():
+    """In a fresh process, importing a staged-forever module registers
+    ZERO @query entries (only its staged names), and importing a live
+    module registers nothing outside the live registry. Catches a
+    staged module that starts registering live queries at import."""
+    code = (
+        "import json, sys; sys.path.insert(0, %r)\n"
+        "from dist_map_reduce_spark import registry\n"
+        "from dist_map_reduce_spark.functions import curation_funnel\n"
+        "a = set(registry.QUERIES)\n"
+        "from dist_map_reduce_spark.functions import quality_ccnet_buckets\n"
+        "b = set(registry.QUERIES) - a\n"
+        "from dist_map_reduce_spark.operators import delta_merge\n"
+        "c = set(registry.QUERIES) - a - b\n"
+        "from dist_map_reduce_spark.functions import text_bloom\n"
+        "from dist_map_reduce_spark.functions import text_cms\n"
+        "d = set(registry.QUERIES) - a - b - c\n"
+        "assert not d, f'staged modules registered @query riders: {d}'\n"
+        "s = set(registry.STAGED_QUERIES)\n"
+        "print(json.dumps([sorted(a), sorted(b), sorted(c), sorted(s)]))\n"
+        % REPO_ROOT
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", code],
+        capture_output=True,
+        text=True,
+        timeout=120,
+    )
+    assert out.returncode == 0, out.stderr
+    funnel, ccnet, merge, staged = json.loads(
+        out.stdout.strip().splitlines()[-1]
+    )
+    live = set(registry.QUERIES)
+    assert "curation_funnel" in funnel and set(funnel) <= live, funnel
+    assert "quality_ccnet_buckets" in ccnet and set(ccnet) <= live, ccnet
+    assert merge == ["cdc_merge_upsert_orders"], merge
+    assert staged == ["text_bloom_decontaminate", "text_cms_heavy_hitters"], (
+        staged
+    )
+
+
+def test_window_count_pins_in_fresh_subprocess():
+    """A fresh process that only calls load_all() registers exactly the
+    queries this process holds and orders the first WINDOW_SIZE of
+    them identically — with and without -O (assert-stripped)."""
+    code = (
+        "import json, sys; sys.path.insert(0, %r)\n"
+        "from dist_map_reduce_spark import registry\n"
+        "registry.load_all()\n"
+        "import __spark_entry__\n"
+        "print(json.dumps([len(registry.QUERIES),"
+        " list(__spark_entry__.queries())[:%d]]))\n" % (REPO_ROOT, WINDOW_SIZE)
+    )
+    for flags in ([], ["-O"]):
+        out = subprocess.run(
+            [sys.executable, *flags, "-c", code],
+            capture_output=True,
+            text=True,
+            timeout=120,
+        )
+        assert out.returncode == 0, out.stderr
+        n_total, window = json.loads(out.stdout.strip().splitlines()[-1])
+        assert n_total == len(registry.QUERIES)
+        assert window == list(e.queries())[:WINDOW_SIZE]
+
+
 def test_registry_holds_at_saturation_ceiling():
     """SATURATION POLICY pin (registry docstring): the registered
     surface is capped at exactly 200 queries = 4 windows x 50, keeping

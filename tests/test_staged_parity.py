@@ -1,7 +1,7 @@
 """Oracle parity for STAGED queries — the same harness as
 tests/test_parity.py (``conftest.assert_parity`` resolves a name in
-either registry), so a staged query is held to the driver's check
-without ever occupying a driver window slot."""
+either registry), so a staged query is held to the same oracle
+check as a live query without occupying a correctness-window slot."""
 
 from __future__ import annotations
 
