@@ -3,8 +3,12 @@
 The reference's "dataset = a directory of files" model (reference:
 src/master/master.go:327-339) generalizes here to self-describing
 Parquet tables (FIXTURES.md). Spark's FileSourceScanExec handles
-split planning, predicate pushdown, and column pruning — the
-per-file map-task enumeration the reference does by hand.
+predicate pushdown, column pruning and split planning — but split
+planning is per parquet ROW GROUP, not per byte range: a file with
+one row group is one task whatever its size. Every fixture and
+generated table here is one single-row-group file, so a corpus scan
+runs on one core; ``spread`` is the one way a query fans such a scan
+out before heavy per-row work.
 """
 
 from __future__ import annotations
@@ -89,6 +93,22 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         df = df.withColumn("ts", F.col("ts").cast("timestamp"))
     _DF_MEMO[(sf_dir, name)] = (spark, stamp, df)
     return df
+
+
+def spread(df: DataFrame) -> DataFrame:
+    """Round-robin ``df`` over the session's cores.
+
+    A single-row-group parquet file scans as ONE task (see the module
+    docstring), and AQE coalesces the small shuffles after it to one
+    partition, so a heavy per-row stage over a corpus scan — a
+    tokenizing explode, a winnow or DP projection, a Python/Arrow
+    stage, a Lloyd assignment — would run on one core while the rest
+    wait. Spreading first costs one narrow exchange of the input
+    rows; at 100 TB the scan already has thousands of splits and
+    that exchange is noise. Use it only before heavy per-row work,
+    never on the warm path of a slot reader (an extra exchange there
+    is pure cost)."""
+    return df.repartition(df.sparkSession.sparkContext.defaultParallelism)
 
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

@@ -54,7 +54,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from dist_map_reduce_spark.caching import persist_tracked
-from dist_map_reduce_spark.catalog import load_table
+from dist_map_reduce_spark.catalog import load_table, spread
 from dist_map_reduce_spark.registry import query
 
 MAX_DF = 20  # inverted-index df cut: bounds per-shingle pair fan-out
@@ -123,11 +123,10 @@ def lexical_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
             lambda i: F.array_join(F.slice(ws, i, COS_N), " "),
         ),
     ).otherwise(F.array())
-    # pre-explode repartition: spreads the shingle explode across
-    # cores on a single-split fixture scan (see text_boilerplate);
-    # width follows the session's core count, never a literal cap
+    # pre-explode spread: the shingle explode is the heavy stage
+    # (see catalog.spread)
     tf = (
-        docs.repartition(docs.sparkSession.sparkContext.defaultParallelism)
+        spread(docs)
         .select("doc_id", F.explode(shingles).alias("term"))
         .groupBy("doc_id", "term")
         .agg(F.count("*").alias("tf"))

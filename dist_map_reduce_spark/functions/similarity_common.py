@@ -19,6 +19,8 @@ import math
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from dist_map_reduce_spark.catalog import spread
+
 DIM = 64
 N_PLANES = 8
 N_QUERIES = 5  # query set: vec_id < 5
@@ -291,13 +293,15 @@ def kmeans_centroids_shared(emb: DataFrame, sf_dir: str) -> DataFrame:
     to discard (measured r12; caching.peek exists for exactly this).
     Callers needing the ASSIGNMENT (kmeans_embedding_cells,
     semdedup) or a non-default k keep calling ``kmeans_fit``
-    directly."""
+    directly. The builder ``spread``s the corpus: every Lloyd round
+    scores K cells per vector, heavy per-row work that a
+    single-row-group embeddings scan would run on one core."""
     from dist_map_reduce_spark.caching import get_or_build
 
     return get_or_build(
         "kmeans_centroids_raw",
         sf_dir,
-        lambda: kmeans_fit(emb)[1],
+        lambda: kmeans_fit(spread(emb))[1],
         session=emb.sparkSession,
     )
 
@@ -325,7 +329,10 @@ def ivf_ranked_cells(
     must use one slot name per centroid SPACE ('ivf_ranked_cells'
     label-centroid, KMEANS_IVF_RANKED_SLOT raw k-means,
     'ivfadc_ranked_cells' normalized k-means). Peek-first so a warm
-    slot skips constructing the ranking plan entirely."""
+    slot skips constructing the ranking plan entirely. Only the
+    builder ``spread``s the corpus (the per-vector × cell scoring is
+    the heavy stage); the warm search path reads the slot unspread,
+    where an extra exchange measured no faster."""
     from pyspark.sql import Window as W
 
     from dist_map_reduce_spark.caching import get_or_build
@@ -335,7 +342,7 @@ def ivf_ranked_cells(
 
     def build() -> DataFrame:
         # hoisted norms — see norm_expr (bit-identical ccos)
-        emb_n = emb.select(
+        emb_n = spread(emb).select(
             "vec_id", "embedding", norm_expr("embedding").alias("_en")
         )
         cent_n = cent.withColumn("_cn", norm_expr("centroid"))

@@ -26,7 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from dist_map_reduce_spark.catalog import load_table
+from dist_map_reduce_spark.catalog import load_table, spread
 from dist_map_reduce_spark.functions.text_dupngrams import doc_ngrams
 from dist_map_reduce_spark.registry import query
 
@@ -47,14 +47,11 @@ def boilerplate_ngrams(
     (group by (doc, gram), then re-shuffle that whole table by gram),
     whose second exchange carries every (doc, gram) pair again.
     Within-document repetition collapses map-side either way; the win
-    is the second shuffle's width. The pre-explode ``repartition``
-    spreads the gram explode across cores even when the corpus scan
-    has few splits (the fixtures are one 0.6 MB split — one core
-    otherwise); at 100 TB the scan has thousands of splits and the
-    exchange is a rounding error against the explode it feeds."""
-    n_parts = docs.sparkSession.sparkContext.defaultParallelism
+    is the second shuffle's width. The gram explode runs on a
+    ``catalog.spread`` corpus, so it uses every core even though the
+    fixture scan is one task."""
     df_counts = (
-        doc_ngrams(docs.repartition(n_parts), n)
+        doc_ngrams(spread(docs), n)
         .groupBy("gram")
         .agg(F.count_distinct("doc_id").alias("n_docs_with"))
     )

@@ -33,7 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from dist_map_reduce_spark.catalog import load_table
+from dist_map_reduce_spark.catalog import load_table, spread
 from dist_map_reduce_spark.registry import query
 
 K_GRAM = 16  # char k-gram length
@@ -193,16 +193,10 @@ def winnow_match_pairs(docs: DataFrame, min_shared: int = 2) -> DataFrame:
     # fps is never null/empty here (winnow_fingerprints pre-filters
     # length ≥ K+W−1, guaranteeing ≥ 1 window), so OUTER emits
     # exactly the same rows.
-    # pre-projection repartition: the winnow expression is the
-    # expensive stage (~1 ms/doc of md5 + window mins), and a
-    # single-file fixture scan plans ONE partition — spread it across
-    # the session's cores (the curation_ext/text_boilerplate
-    # precedent; measured 6.5 s -> sub-second at sf0.1). At 100 TB
-    # the scan already has thousands of splits and this one extra
-    # narrow shuffle of (doc_id, text) is noise.
-    docs = docs.repartition(
-        docs.sparkSession.sparkContext.defaultParallelism
-    )
+    # pre-projection spread: the winnow expression is the expensive
+    # stage (~1 ms/doc of md5 + window mins; see catalog.spread —
+    # measured 6.5 s -> sub-second at sf0.1)
+    docs = spread(docs)
     from pyspark.sql import Window as W
 
     fp_docs = (
@@ -263,10 +257,9 @@ def winnow_decontaminate(
     # explode_OUTER on both sides — see winnow_match_pairs: plain
     # explode infers a size/isnotnull filter that inlines the whole
     # winnow pipeline per window slice (no CSE inside lambdas);
-    # pre-projection repartition for the same single-split reason
-    par = train.sparkSession.sparkContext.defaultParallelism
-    train = train.repartition(par)
-    eval_docs = eval_docs.repartition(par)
+    # pre-projection spread for the same single-split reason
+    train = spread(train)
+    eval_docs = spread(eval_docs)
     from pyspark.sql import Window as W
 
     # drop-count-first cap on the TRAIN side (the SCALE.md

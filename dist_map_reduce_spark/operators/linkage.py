@@ -31,7 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from dist_map_reduce_spark.catalog import load_table
+from dist_map_reduce_spark.catalog import load_table, spread
 from dist_map_reduce_spark.registry import query
 
 BLOCK_LEN = 6  # blocking key: first BLOCK_LEN characters
@@ -99,10 +99,8 @@ def fuzzy_match_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.abs(F.length("ta") - F.length("tb")) <= MAX_DIST)
     )
     # the candidate table is byte-small but each row carries an
-    # O(len²) DP — force parallelism before the distance stage (the
-    # same AQE-coalesce-vs-compute-heavy pattern as the triangle
-    # intersect)
-    width = cands.sparkSession.sparkContext.defaultParallelism
+    # O(len²) DP — spread it before the distance stage, or AQE
+    # coalesces it to one partition (the triangle-intersect pattern)
     # thresholded levenshtein: Spark's banded DP stops exploring
     # cells that cannot come back under MAX_DIST (O(len·k) instead of
     # O(len²)) and returns -1 above the threshold — so the filter is
@@ -110,7 +108,7 @@ def fuzzy_match_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (DuckDB has no banded variant; the oracle's unbounded DP gives
     # the same surviving rows by definition)
     return (
-        cands.repartition(width)
+        spread(cands)
         .select(
             "doc_a",
             "doc_b",

@@ -736,3 +736,57 @@ def test_length_buckets_plan_shape(spark):
         assert "doc_id" not in s and "lang" not in s, (
             "documents scan reads columns the bucketing never uses"
         )
+
+
+def _one_round_robin_below(plan: str, op: str, width: int) -> None:
+    """``plan`` holds exactly one round-robin exchange, of ``width``
+    partitions, printed below (feeding) its first ``op`` node."""
+    lines = plan.splitlines()
+    rr = [i for i, l in enumerate(lines) if "RoundRobinPartitioning" in l]
+    assert len(rr) == 1, plan
+    assert f"RoundRobinPartitioning({width})" in lines[rr[0]], plan
+    top = next(i for i, l in enumerate(lines) if op in l)
+    assert rr[0] > top, plan
+
+
+def test_spread_width_is_default_parallelism(spark):
+    from dist_map_reduce_spark.catalog import load_table, spread
+
+    docs = load_table(spark, SF_SMOKE, "documents")
+    width = spark.sparkContext.defaultParallelism
+    assert spread(docs).rdd.getNumPartitions() == width
+
+
+@pytest.mark.parametrize(
+    "name", ["wordcount", "wordcount_unicode", "wordcount_per_doc_topk"]
+)
+def test_wordcount_spreads_scan_below_generate(spark, name):
+    """The batch word counts spread the one-task documents scan
+    before the tokenizing explode (catalog.spread)."""
+    _one_round_robin_below(
+        _plan(spark, name), "Generate", spark.sparkContext.defaultParallelism
+    )
+
+
+def test_arrow_stats_spreads_scan_below_map_in_arrow(spark):
+    plan = (
+        registry.STAGED_QUERIES["arrow_text_stats_per_source"](
+            spark, SF_SMOKE
+        )
+        ._jdf.queryExecution()
+        .executedPlan()
+        .toString()
+    )
+    _one_round_robin_below(
+        plan, "MapInArrow", spark.sparkContext.defaultParallelism
+    )
+
+
+def test_warm_ivf_kmeans_search_is_not_spread(spark):
+    """Only the slot builders spread the corpus; once the k-means
+    and ranking slots exist, the search reads them with no
+    round-robin exchange."""
+    registry.QUERIES["similarity_ann_ivf_kmeans_topk"](spark, SF_SMOKE)
+    plan = _plan(spark, "similarity_ann_ivf_kmeans_topk")
+    assert _n_slot_reads(plan) >= 1, plan
+    assert "RoundRobinPartitioning" not in plan, plan
