@@ -11,6 +11,9 @@ here are comparable to BENCH_r*.json — or the noop sink with
 query whose cost hides in pruned columns). Jobs are labelled via
 setJobDescription. ``--explain DIR`` writes ``DIR/<name>.txt`` with
 the ``explain('formatted')`` output of the query's DataFrame.
+``compiles=`` gives, per run, the classes Janino compiled during it
+(session.codegen_compiles): a slow warm run with compiles > 0 is
+paying code generation, not execution.
 
 Runs on the ENGINE session (session.get_spark), like bench.py.
 """
@@ -24,7 +27,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from dist_map_reduce_spark import registry  # noqa: E402
-from dist_map_reduce_spark.session import get_spark  # noqa: E402
+from dist_map_reduce_spark.session import codegen_compiles, get_spark  # noqa: E402
 
 registry.load_all()
 
@@ -66,9 +69,10 @@ def main() -> int:
             )
             with open(os.path.join(explain_dir, f"{name}.txt"), "w") as fh:
                 fh.write(plan)
-        samples = []
+        samples, compiles = [], []
         for i in range(runs):
             spark.sparkContext.setJobDescription(f"{name} run {i}")
+            c0 = codegen_compiles(spark)
             t0 = time.perf_counter()
             d = fn(spark, sf_dir)
             if use_noop:
@@ -76,11 +80,14 @@ def main() -> int:
             else:
                 d.count()
             samples.append(time.perf_counter() - t0)
+            compiles.append(codegen_compiles(spark) - c0)
             spark.sparkContext.setJobDescription(None)
         best = min(samples)
         print(
             f"{name}: best={best:.3f}s runs="
             + ",".join(f"{s:.3f}" for s in samples)
+            + " compiles="
+            + ",".join(str(c) for c in compiles)
         )
     return 0
 
